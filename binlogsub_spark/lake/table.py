@@ -13,9 +13,11 @@ required Iceberg-style semantics itself, on plain parquet + JSON manifests:
   the bucket count is the knob bounding per-commit rewrite volume; bucket
   dirs are Spark partition dirs, so reads get partition pruning for free.
 * **Schema-union evolution**: each commit records its schema; the table
-  schema is the union. Readers null-backfill old files (Iceberg
-  add-column semantics). This is how the in-band ``tool`` column appearing
-  mid-stream lands without rewriting history
+  schema is the union. Reads take the manifest's union schema, so the
+  parquet reader null-fills columns an old file lacks and widens narrower
+  stored types (Iceberg add-column semantics) with no inference job. This
+  is how the in-band ``tool`` column appearing mid-stream lands without
+  rewriting history
   (reference epoch flush: /root/reference/packet.cc:141-148).
 * **Idempotent commits**: a manifest carries the high-water ``batch_id``;
   replaying an already-committed micro-batch is a no-op. Together with
@@ -74,6 +76,11 @@ def bucket_expr(col, buckets: int):
     return F.pmod(
         F.crc32(F.encode(F.coalesce(c, F.lit("")), "UTF-8")), F.lit(buckets)
     ).cast("int")
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class LakeTable:
@@ -280,30 +287,7 @@ class LakeTable:
         return T.StructType(fields)
 
     # --------------------------------------------------------------- reads
-    def _read_commit(
-        self, commit_rel: str, buckets: list[int], target: T.StructType
-    ) -> DataFrame:
-        commit_dir = os.path.join(self.data_dir, commit_rel)
-        df = (
-            self.spark.read.option("basePath", commit_dir)
-            .parquet(commit_dir)
-            .where(F.col("_bucket").isin(buckets))  # partition-pruned scan
-        )
-        cols = []
-        have = set(df.columns)
-        for f in target.fields:
-            cols.append(
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)  # null-backfill
-            )
-        return df.select(*cols, F.col("_bucket"))
-
-    def read_internal(
-        self, buckets: list[int] | None = None, snapshot_id: int | None = None
-    ) -> DataFrame:
-        """All rows incl. tombstones + version cols + _bucket, optionally
-        restricted to a bucket subset (merge-time pruning) and/or pinned to
-        a historical snapshot (time travel)."""
+    def _snapshot_or_raise(self, snapshot_id: int | None) -> dict:
         snap = self.snapshot(snapshot_id)
         if snap is None:
             if snapshot_id is not None:
@@ -312,7 +296,31 @@ class LakeTable:
                     f"or expired by vacuum()) for table {self.path}"
                 )
             raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
+        return snap
+
+    def _read_commit(
+        self, commit_rel: str, buckets: list[int], schema: T.StructType
+    ) -> DataFrame:
+        # ``schema`` ends in ``_bucket int`` (the partition column); giving
+        # it up front means no schema-inference job, and the parquet reader
+        # null-fills columns an older file lacks and widens narrower stored
+        # types along the _WIDEN_RANK / decimal chains _union_schema allows
+        commit_dir = os.path.join(self.data_dir, commit_rel)
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", commit_dir)
+            .parquet(commit_dir)
+            .where(f"_bucket IN ({', '.join(map(str, buckets))})")  # pruned
+        )
+
+    def _read_snapshot(
+        self, snap: dict, buckets: list[int] | None, schema: T.StructType
+    ) -> DataFrame:
+        """Rows of ``snap`` (tombstones and version cols included, plus
+        ``_bucket``) in ``buckets`` (None: all), typed by ``schema``."""
+        with_bucket = T.StructType(
+            list(schema.fields) + [T.StructField("_bucket", T.IntegerType())]
+        )
         locs: dict[str, str | None] = snap["bucket_locations"]
         # "all buckets" means the SNAPSHOT's bucket space, not the current
         # handle's — time travel across a rebucket() reads the old layout.
@@ -323,35 +331,38 @@ class LakeTable:
             if commit is not None and b in want:
                 by_commit.setdefault(commit, []).append(b)
         if not by_commit:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(schema.fields) + [T.StructField("_bucket", T.IntegerType())])
-            )
+            return self.spark.createDataFrame([], with_bucket)
         parts = [
-            self._read_commit(commit, bs, schema) for commit, bs in by_commit.items()
+            self._read_commit(commit, bs, with_bucket)
+            for commit, bs in by_commit.items()
         ]
         df = parts[0]
         for p in parts[1:]:
-            df = df.unionByName(p)
+            df = df.union(p)
         return df
+
+    def _live(self, snap: dict, buckets: list[int] | None = None) -> DataFrame:
+        schema = self._schema(snap)
+        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
+        return (
+            self._read_snapshot(snap, buckets, schema)
+            .where("_op <> 'D'")
+            .select(*user_cols)
+        )
+
+    def read_internal(
+        self, buckets: list[int] | None = None, snapshot_id: int | None = None
+    ) -> DataFrame:
+        """All rows incl. tombstones + version cols + _bucket, optionally
+        restricted to a bucket subset (merge-time pruning) and/or pinned to
+        a historical snapshot (time travel)."""
+        snap = self._snapshot_or_raise(snapshot_id)
+        return self._read_snapshot(snap, buckets, self._schema(snap))
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """User-facing view: live rows only, no internal columns.
         ``snapshot_id`` pins a historical state (time travel)."""
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            if snapshot_id is not None:
-                raise ValueError(
-                    f"snapshot {snapshot_id} does not exist (never committed, "
-                    f"or expired by vacuum()) for table {self.path}"
-                )
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
-        return (
-            self.read_internal(snapshot_id=snapshot_id)
-            .where(F.col("_op") != "D")
-            .select(*user_cols)
-        )
+        return self._live(self._snapshot_or_raise(snapshot_id))
 
     def changes(
         self,
@@ -378,24 +389,17 @@ class LakeTable:
         bucket-location diff between the two manifests prunes the scan to
         changed buckets before reading a byte — a 1-conversation commit on
         a 100 TB table diffs 1/buckets of it. ``from_snapshot_id=None``
-        means "from the empty table" (everything live is an I)."""
-        to_snap = self.snapshot(to_snapshot_id)
-        if to_snap is None:
-            if to_snapshot_id is not None:
-                raise ValueError(
-                    f"snapshot {to_snapshot_id} does not exist (never "
-                    f"committed, or expired by vacuum()) for table {self.path}"
-                )
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        to_id = to_snap["snapshot_id"]
+        means "from the empty table" (everything live is an I).
+
+        Both sides are read with the to-snapshot's schema — the union of
+        every schema before it — so a column added between the two
+        snapshots reads as NULL on the from side."""
+        to_snap = self._snapshot_or_raise(to_snapshot_id)
         from_snap = (
-            self.snapshot(from_snapshot_id) if from_snapshot_id is not None else None
+            None
+            if from_snapshot_id is None
+            else self._snapshot_or_raise(from_snapshot_id)
         )
-        if from_snapshot_id is not None and from_snap is None:
-            raise ValueError(
-                f"snapshot {from_snapshot_id} does not exist (never committed, "
-                f"or expired by vacuum()) for table {self.path}"
-            )
         locs_to: dict = to_snap["bucket_locations"]
         locs_from: dict = from_snap["bucket_locations"] if from_snap else {}
         same_space = from_snap is None or from_snap.get("buckets") == to_snap.get(
@@ -441,120 +445,63 @@ class LakeTable:
         schema = self._schema(to_snap)
         user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
         payload = [c for c in user_cols if c not in MERGE_KEY]
-        out_fields = (
-            [T.StructField("change_op", T.StringType())]
-            + [schema[c] for c in user_cols]
-            + [schema[c] for c in VERSION_COLUMNS if c != "_op"]
-            + (
-                [
-                    T.StructField(f"_before_{c}", schema[c].dataType)
-                    for c in payload
-                ]
-                if include_before
-                else []
-            )
-        )
+        stamp = [c for c in VERSION_COLUMNS if c != "_op"]
+        before = payload if include_before else []
         if not changed:
-            return self.spark.createDataFrame([], T.StructType(out_fields))
+            return self.spark.createDataFrame([], T.StructType(
+                [T.StructField("change_op", T.StringType())]
+                + [schema[c] for c in user_cols + stamp]
+                + [T.StructField(f"_before_{c}", schema[c].dataType) for c in before]
+            ))
 
-        def _side(df: DataFrame, tag: str, live_only: bool) -> DataFrame:
-            keep = (
-                MERGE_KEY
-                + payload
-                + [c for c in VERSION_COLUMNS if c != "_op"]
-                + ["_op"]
-            )
-            renamed = df.select(
-                *MERGE_KEY,
-                *[F.col(c).alias(f"{tag}_{c}") for c in keep if c not in MERGE_KEY],
-                F.lit(True).alias(f"{tag}_present"),
-            )
-            if live_only:
-                return renamed.where(F.col(f"{tag}__op") != "D").drop(f"{tag}__op")
-            return renamed
-
+        # SQL strings, not one Column per field: building the plan costs a
+        # few Python->JVM calls instead of several per column
+        keys = [_quote(c) for c in MERGE_KEY]
         # keep the to-side TOMBSTONES: a D row's version stamp must be the
         # DELETING event's (carried by the tombstone), not the old row's —
         # an outbound subscriber replaying the feed with LWW needs the
         # delete to strictly beat the row it removes.
-        new = _side(
-            self.read_internal(buckets=to_changed, snapshot_id=to_id),
-            "n",
-            live_only=False,
-        )
+        new = self._read_snapshot(to_snap, to_changed, schema)
         if from_snap is None:
-            return new.where(F.col("n__op") != "D").select(
-                F.lit("I").alias("change_op"),
-                *MERGE_KEY,
-                *[F.col(f"n_{c}").alias(c) for c in payload],
+            return new.where("_op <> 'D'").selectExpr(
+                "'I' AS change_op",
+                *keys,
+                *[_quote(c) for c in payload + stamp],
                 *[
-                    F.col(f"n_{c}").alias(c)
-                    for c in ("_ts", "_file_seq", "_log_pos")
+                    f"CAST(NULL AS {schema[c].dataType.simpleString()}) "
+                    f"AS {_quote('_before_' + c)}"
+                    for c in before
                 ],
-                *(
-                    [
-                        F.lit(None)
-                        .cast(schema[c].dataType)
-                        .alias(f"_before_{c}")
-                        for c in payload
-                    ]
-                    if include_before
-                    else []
-                ),
             )
-        old = _side(
-            self.read_internal(
-                buckets=from_changed, snapshot_id=from_snap["snapshot_id"]
-            ),
-            "o",
-            live_only=True,
+        old = self._read_snapshot(from_snap, from_changed, schema).where(
+            "_op <> 'D'"
         )
-        j = old.join(new, MERGE_KEY, "full_outer")
-        has_new_row = F.col("n_present").isNotNull()
-        has_new = has_new_row & (F.col("n__op") != "D")  # live on the to side
-        has_old = F.col("o_present").isNotNull()
-        same_version = (
-            (F.col("o__ts") == F.col("n__ts"))
-            & (F.col("o__file_seq") == F.col("n__file_seq"))
-            & (F.col("o__log_pos") == F.col("n__log_pos"))
+        packed = f"struct({', '.join(_quote(c) for c in payload + stamp + ['_op'])})"
+        j = old.selectExpr(*keys, f"{packed} AS o").join(
+            new.selectExpr(*keys, f"{packed} AS n"), MERGE_KEY, "full_outer"
         )
+        has_new = "(n IS NOT NULL AND n._op <> 'D')"  # live on the to side
+        same_version = " AND ".join(f"o.{c} = n.{c}" for c in stamp)
         # keys with a to-side tombstone and no from-side live row (created
         # AND deleted inside the window) net to nothing -> no branch -> NULL
         op = (
-            F.when(has_new & ~has_old, "I")
-            .when(~has_new & has_old, "D")
-            .when(
-                has_new & has_old,
-                F.when(same_version, F.lit(None)).otherwise(F.lit("U")),
-            )
+            f"CASE WHEN {has_new} AND o IS NULL THEN 'I' "
+            f"WHEN NOT {has_new} AND o IS NOT NULL THEN 'D' "
+            f"WHEN {has_new} AND o IS NOT NULL "
+            f"THEN IF({same_version}, NULL, 'U') END"
         )
-        side = lambda c: F.when(F.col("change_op") == "D", F.col(f"o_{c}")).otherwise(
-            F.col(f"n_{c}")
-        )
-        # version stamp: D rows report the DELETING event's position (the
-        # to-side tombstone); only when the tombstone was expired by
-        # vacuum/compaction do they fall back to the removed row's stamp
-        ver = lambda c: F.when(
-            (F.col("change_op") == "D") & ~has_new_row, F.col(f"o_{c}")
-        ).otherwise(F.col(f"n_{c}"))
-        return (
-            j.withColumn("change_op", op)
-            .where(F.col("change_op").isNotNull())
-            .select(
-                "change_op",
-                *MERGE_KEY,
-                *[side(c).alias(c) for c in payload],
-                *[ver(c).alias(c) for c in ("_ts", "_file_seq", "_log_pos")],
-                *(
-                    [
-                        F.col(f"o_{c}").alias(f"_before_{c}")
-                        for c in payload
-                    ]
-                    if include_before
-                    else []
-                ),
-            )
-        )
+        return j.selectExpr(
+            f"{op} AS change_op",
+            *keys,
+            # I/U carry the to-state's payload, D the from-state's
+            *[f"IF({has_new}, n.{_quote(c)}, o.{_quote(c)}) AS {_quote(c)}"
+              for c in payload],
+            # version stamp: D rows report the DELETING event's position
+            # (the to-side tombstone); only when the tombstone was expired
+            # by vacuum/compaction do they fall back to the removed row's
+            *[f"IF(n IS NULL, o.{c}, n.{c}) AS {c}" for c in stamp],
+            *[f"o.{_quote(c)} AS {_quote('_before_' + c)}" for c in before],
+        ).where("change_op IS NOT NULL")
 
     def read_for_keys(
         self, keys: list[str], snapshot_id: int | None = None
@@ -571,16 +518,8 @@ class LakeTable:
                 bucket_expr(key_col, self.buckets).alias("_b")
             ).distinct().collect()
         )
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
-        return (
-            self.read_internal(buckets=buckets, snapshot_id=snapshot_id)
-            .where((F.col("_op") != "D") & F.col(key_col).isin(keys))
-            .select(*user_cols)
-        )
+        snap = self._snapshot_or_raise(snapshot_id)
+        return self._live(snap, buckets).where(F.col(key_col).isin(keys))
 
     # --------------------------------------------------------------- merge
     def merge(
@@ -599,16 +538,17 @@ class LakeTable:
         Returns {applied, superseded, replayed, snapshot_id}. Replaying an
         already-committed batch_id is a committed no-op.
 
-        Two merge strategies (EngineConfig.merge_strategy / ctor arg):
+        Merge strategies (EngineConfig.merge_strategy / ctor arg):
 
-        * ``jvm`` (default): salted partial reduce -> final hash-agg reduce
-          -> bucket repartition -> write. Three exchanges, all whole-stage
-          codegen; measured fastest in local mode, where exchange = memcpy.
-        * ``arrow_local``: salted partial reduce -> ONE bucket-colocation
+        * ``jvm`` (default): salted partial reduce -> ONE bucket-colocation
           exchange of (partials ∪ touched current rows) -> partition-local
-          Arrow finalize -> shuffle-free write. One fewer full exchange —
-          the right trade on a real cluster where exchanges cross the
-          network, at the cost of an Arrow/Python boundary pass.
+          final LWW reduce -> shuffle-free write. Two exchanges (the
+          partial reduce's and the colocation), all whole-stage codegen.
+        * ``arrow_local``: the same two exchanges, with the partition-local
+          final reduce done as an Arrow finalize (an Arrow/Python boundary
+          pass) instead of a JVM aggregation.
+        * ``jvm_legacy``: the final reduce BEFORE the bucket exchange; kept
+          for A/B measurement only.
 
         ``touched_buckets``: a pre-computed SUPERSET of the hash buckets the
         batch touches (``bucket_expr`` over the batch's merge keys). With it
@@ -812,9 +752,9 @@ class LakeTable:
                 # one-pass touched SUPERSET where every event was scope-
                 # filtered away, against buckets with no prior data) — the
                 # commit dir holds zero parquet files, so pointing
-                # bucket_locations at it would make every later read fail
-                # schema inference. Keep prior locations; the manifest
-                # still advances batch_id/watermark.
+                # bucket_locations at it would register empty buckets as
+                # live. Keep prior locations; the manifest still advances
+                # batch_id/watermark.
 
             manifest = {
                 "snapshot_id": snapshot_id,
@@ -1058,16 +998,8 @@ class LakeTable:
                 .collect()
             }
         )
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
-        return (
-            self.read_internal(buckets=buckets)
-            .where(F.col("_op") != "D")
-            .where(F.col(key_col).isin(keys))
-            .select(*user_cols)
+        return self._live(self._snapshot_or_raise(None), buckets).where(
+            F.col(key_col).isin(keys)
         )
 
     # ----------------------------------------------------------------- tags

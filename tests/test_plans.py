@@ -100,6 +100,43 @@ def test_changelog_scan_reads_only_changed_buckets(spark, tmp_path):
                 cfg=EngineConfig(), persist_source=True)
     plan = _plan(table.changes(s1))
     assert "_bucket" in plan  # bucket predicate reached the scan
+    # one shuffle per side of the full-outer join, nothing more
+    assert plan.count("Exchange") == 2, plan
+
+
+def test_reads_launch_no_schema_inference_job(spark, tmp_path):
+    """Commit reads take their schema from the manifest: building
+    read_internal(), read() and changes(prev) runs no Spark job (a
+    schema-less parquet read launches one inference job per commit)."""
+    from binlogsub_spark.lake.table import LakeTable
+
+    cols = (
+        "conv_id string, turn_idx int, text string, _op string, "
+        "_ts double, _file_seq int, _log_pos long"
+    )
+    table = LakeTable(spark, str(tmp_path / "t"), buckets=4)
+    table.merge(
+        spark.createDataFrame([(f"c{i}", 0, "a", "I", 1.0, 0, i) for i in range(8)], cols),
+        batch_id=1,
+    )
+    s1 = table.snapshot()["snapshot_id"]
+    table.merge(
+        spark.createDataFrame([("c0", 0, "b", "I", 2.0, 0, 100)], cols), batch_id=2
+    )
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    group = "no-inference-jobs"
+    sc.setJobGroup(group, "build reads without running them")
+    try:
+        table.read_internal()
+        table.read()
+        table.changes(s1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()  # job-start events reach the status store async
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_incremental_dedup_no_cartesian_and_semi_join(spark):

@@ -106,6 +106,17 @@ def test_schema_lossless_widening_allowed(spark, tmp_path):
     assert dict(final.dtypes)["score"] == "bigint"
     got = {r["conv_id"]: r["score"] for r in final.collect()}
     assert got == {"c1": 7, "c2": 2**40}
+    # a bucket whose only file predates the widening still reads with the
+    # manifest's type, alone and in the change feed
+    old_only = [
+        int(b) for b, loc in table.snapshot()["bucket_locations"].items()
+        if loc == "commit-00000001"
+    ]
+    assert old_only
+    part = table.read_internal(buckets=old_only)
+    assert dict(part.dtypes)["score"] == "bigint"
+    assert [r["score"] for r in part.collect()] == [7]
+    assert dict(table.changes(None).dtypes)["score"] == "bigint"
     # and a narrow batch into the widened table still casts up cleanly
     table.merge(
         spark.createDataFrame(
@@ -116,3 +127,44 @@ def test_schema_lossless_widening_allowed(spark, tmp_path):
         batch_id=3,
     )
     assert table.read().where("conv_id = 'c3'").first()["score"] == 9
+
+
+def test_changes_across_column_addition(spark, tmp_path):
+    """changes(from) where a commit in between added a column: the from
+    side predates the column and reads it as NULL (with and without the
+    before images)."""
+    table = LakeTable(spark, str(tmp_path / "tbl"), buckets=4)
+    base = "conv_id string, turn_idx int, role string, text string"
+    version = "_op string, _ts double, _file_seq int, _log_pos long"
+    table.merge(
+        spark.createDataFrame(
+            [("c1", 0, "user", "hi", "I", 1.0, 0, 1),
+             ("c2", 0, "user", "yo", "I", 1.0, 0, 2)],
+            f"{base}, {version}",
+        ),
+        batch_id=1,
+    )
+    s1 = table.snapshot()["snapshot_id"]
+    table.merge(
+        spark.createDataFrame(
+            [("c1", 0, "user", "hi!", "x", "I", 2.0, 0, 3),
+             ("c3", 0, "user", "new", "y", "I", 2.0, 0, 4),
+             ("c2", 0, None, None, None, "D", 2.0, 0, 5)],
+            f"{base}, extra string, {version}",
+        ),
+        batch_id=2,
+    )
+    got = {
+        r["conv_id"]: (r["change_op"], r["text"], r["extra"])
+        for r in table.changes(s1).collect()
+    }
+    assert got == {
+        "c1": ("U", "hi!", "x"),
+        "c3": ("I", "new", "y"),
+        "c2": ("D", "yo", None),
+    }
+    before = {
+        r["conv_id"]: (r["_before_text"], r["_before_extra"])
+        for r in table.changes(s1, include_before=True).collect()
+    }
+    assert before == {"c1": ("hi", None), "c3": (None, None), "c2": ("yo", None)}
